@@ -226,10 +226,11 @@ object Bench {
     // pair is the metric most sensitive to throttling; the short interleaved
     // query timings tolerate a drained budget far better.
     def runQueryPhase(): Unit = if (!sys.env.contains("SPARK_GRAFT_SKIP_QUERIES")) {
-      // SPARK_GRAFT_QUERY_FILTER=q_a,q_b times only those headline queries
-      // (local iteration aid, never set by the driver)
-      val qFilter = sys.env.get("SPARK_GRAFT_QUERY_FILTER")
-        .map(_.split(',').map(_.trim).toSet)
+      // SPARK_GRAFT_QUERY_FILTER=q_a,q_b times only those queries — any
+      // SparkEntry query, headline or not (local iteration aid, never set
+      // by the driver)
+      val names = sys.env.get("SPARK_GRAFT_QUERY_FILTER")
+        .map(_.split(',').map(_.trim).toSeq).getOrElse(headline)
       val spark = newSession(cpus)
       val qs = SparkEntry.queries
       // untimed session warmup so the first query doesn't absorb JVM/codegen
@@ -239,7 +240,7 @@ object Bench {
       val reps = sys.env.getOrElse("SPARK_GRAFT_QUERY_REPS", "3").toInt
       (1 to reps).foreach { rep =>
         awaitQuietHost() // one gate per pass; passes are the noise exposure
-        headline.filter(n => qFilter.forall(_.contains(n))).foreach { name =>
+        names.foreach { name =>
           if (!errors.contains(name)) { // a crashed query won't un-crash
             logPhase(s"query $name rep$rep")
             val t0 = System.nanoTime()

@@ -1,13 +1,56 @@
 package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
+
+/**
+ * Physical-plan evidence dumper. Two modes:
+ *
+ *  - `PlanDump <sfDir>` regenerates `PLANS.md` in the working directory: the
+ *    curated plan shapes below, each with the property it demonstrates.
+ *  - `PlanDump <sfDir> <outDir> <tag> [q1,q2,...]` writes
+ *    `<outDir>/<query>_<tag>.txt`, the formatted plan of every SparkEntry
+ *    query (or of the listed ones) — before/after evidence for a change.
+ *
+ * Both dump the dedup operators' INTERIOR plans: their eager pair
+ * checkpoint would otherwise explain as an opaque `Scan ExistingRDD`.
+ */
 object PlanDump {
   def main(args: Array[String]): Unit = {
+    require(args.length == 1 || args.length == 3 || args.length == 4,
+      "usage: PlanDump <sfDir> [<outDir> <tag> [query,query,...]]")
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[4]").config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val sf = "/root/testdata/sf0.001"
+    try {
+      if (args.length == 1) writePlansMd(spark, args(0))
+      else dumpQueries(spark, args(0), args(1), args(2),
+        args.lift(3).map(_.split(',').map(_.trim).toSet))
+    } finally spark.stop()
+  }
+
+  /** Formatted interior plan of each selected query → `<outDir>/<q>_<tag>.txt`. */
+  private def dumpQueries(spark: org.apache.spark.sql.SparkSession, sf: String,
+                          outDir: String, tag: String,
+                          only: Option[Set[String]]): Unit = {
+    val out = Paths.get(outDir)
+    Files.createDirectories(out)
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_(n)))
+    only.foreach(o => require((o -- names).isEmpty,
+      s"unknown queries: ${(o -- names).mkString(", ")}"))
+    names.foreach { name =>
+      val plan = graft.operators.Dedup.explainInterior.withValue(true) {
+        SparkEntry.queries(name)(spark, sf).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+      }
+      Files.writeString(out.resolve(s"${name}_$tag.txt"), plan)
+      println(s"dumped $name")
+    }
+  }
+
+  private def writePlansMd(spark: org.apache.spark.sql.SparkSession,
+                           sf: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — key physical plans (generated by graft.PlanDump)\n\n")
     sb.append("Evidence that the declarative formulations get the intended Catalyst\n")
@@ -304,10 +347,11 @@ object PlanDump {
         "aggregate and the bounded_top_k argmax — documents never shuffle; " +
         "the model stays DataFrames and would plan a shuffle join at 10⁹ " +
         "rows unchanged.")
-    dumpInterior("Incremental near-dup (new batch vs persisted signature index)", {
+    val sigRoot = Files.createTempDirectory("plans_sigs")
+    try dumpInterior("Incremental near-dup (new batch vs persisted signature index)", {
       val docs = spark.read.parquet(s"$sf/documents.parquet")
         .select("doc_id", "text")
-      val sigDir = Files.createTempDirectory("plans_sigs").resolve("s").toString
+      val sigDir = sigRoot.resolve("s").toString
       graft.operators.Dedup.minhashSignatures(docs, "doc_id", "text", 3, 64)
         .write.mode("overwrite").parquet(sigDir)
       val newBatch = docs.where(col("doc_id") % 50 === 0)
@@ -322,6 +366,7 @@ object PlanDump {
         "candidate ids only. A +1% re-curation pays new-batch compute plus " +
         "pruned scans, never a corpus recompute (DedupSpec proves " +
         "prev ∪ incremental ≡ full recompute).")
+    finally graft.sink.SnapshotSink.deleteRecursively(sigRoot)
     dump("Unigram-LM tokenize (broadcast Viterbi model, codegen'd projection)", {
       val docs = spark.read.parquet(s"$sf/documents.parquet")
       val model = graft.ml.Unigram.learn(docs, "text", vocabSize = 400,
@@ -351,8 +396,7 @@ object PlanDump {
         "combines, no hot shuffle key); removal sets return as one int " +
         "array per affected doc and reconstruction is a row-local indexed " +
         "filter over the same split.")
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("wrote PLANS.md")
-    spark.stop()
   }
 }

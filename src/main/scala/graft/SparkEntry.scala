@@ -1362,17 +1362,25 @@ object SparkEntry {
       // column pruning — feeding it the computed signature DataFrame would
       // re-shingle+re-minhash the whole old corpus per reference. Signing
       // the corpus to parquet is part of the measured query (computed fresh
-      // from the inputs on every invocation, nothing persists across runs).
-      val sigDir = java.nio.file.Files.createTempDirectory("graft_incr_sigs")
-        .resolve("sigs").toString
-      Dedup.minhashSignatures(docs, "doc_id", "text",
-        shingleN = 3, numHashes = 64)
-        .write.mode("overwrite").parquet(sigDir)
-      val oldSigs = s.read.parquet(sigDir)
-      Dedup.minhashLshPairsIncremental(newBatch, oldSigs, "doc_id", "text",
-        shingleN = 3, bands = 16, rowsPerBand = 4, threshold = 0.6)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("id_a", "id_b")
+      // from the inputs on every invocation, nothing persists across runs):
+      // the operator checkpoints its pairs, so the signature dir is deleted
+      // on return — except for an interior-plan dump, which checkpoints
+      // nothing and still reads it.
+      val sigRoot = java.nio.file.Files.createTempDirectory("graft_incr_sigs")
+      try {
+        val sigDir = sigRoot.resolve("sigs").toString
+        Dedup.minhashSignatures(docs, "doc_id", "text",
+          shingleN = 3, numHashes = 64)
+          .write.mode("overwrite").parquet(sigDir)
+        val oldSigs = s.read.parquet(sigDir)
+        Dedup.minhashLshPairsIncremental(newBatch, oldSigs, "doc_id", "text",
+          shingleN = 3, bands = 16, rowsPerBand = 4, threshold = 0.6)
+          .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+          .orderBy("id_a", "id_b")
+      } finally {
+        if (!Dedup.explainInterior.value)
+          graft.sink.SnapshotSink.deleteRecursively(sigRoot)
+      }
     }),
 
     // CROSS-CORPUS fuzzy decontamination (Llama-style): benchmark side = 5
@@ -1801,7 +1809,7 @@ object SparkEntry {
       """WITH g AS (
         |  SELECT event_id, user_id, ts,
         |    CASE WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL THEN 1
-        |         WHEN CAST(epoch(ts) AS BIGINT) - CAST(epoch(LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) AS BIGINT) > 1800 THEN 1
+        |         WHEN epoch_us(ts) - epoch_us(LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800000000 THEN 1
         |         ELSE 0 END AS is_new
         |  FROM events
         |)

@@ -6,19 +6,23 @@ import org.apache.spark.storage.StorageLevel
 
 /**
  * Deduplication operators for large-scale training-data curation, each a
- * DataFrame transform designed around its shuffle shape:
+ * DataFrame transform designed around its shuffle shape.
  *
- *  - exact: one hash-partitioned groupBy on the content key.
- *  - MinHash+LSH: shingle → signature (row-local) → band explode → bucket
- *    groupBy → within-bucket pairs → exact-Jaccard verify. The only wide ops
- *    are the bucket groupBy and the final distinct; candidate generation
- *    never compares docs across buckets (that's what makes it 100 TB-able —
- *    no O(n²) stage, bucket sizes bounded by banding).
- *  - SimHash: 64-bit row-local signature; near-dup pairs via band join on
- *    16-bit chunks (any pair within Hamming ≤ 3 shares ≥1 exact chunk by
- *    pigeonhole over 4 chunks).
- *  - n-gram Jaccard: inverted-index self-join on shingles (exact, for small
- *    candidate sets / verification of the approximate paths).
+ * Every banded near-dup SELF-join (MinHash-LSH bands, the n-gram inverted
+ * index, 64-bit Hamming chunks, hyperplane-LSH embedding chunks) runs one
+ * candidate-generation core, staged like SparkER's entity resolution
+ * (blocking → purging → candidate pairs → matching). Each stage takes the one
+ * thing its callers differ in:
+ *  1. [[cappedBucketPairs]]: bucket-key column in → capped, deduplicated
+ *     (id_a, id_b) out in one bounded-heap pass, optionally only pairs with a
+ *     NEW side;
+ *  2. [[verifyPairs]]: the payload (shingle set, signature, vector) joins
+ *     back once per candidate, then a score and a keep predicate;
+ *  3. [[incremental]]: new batch computed and cached, old side a storage
+ *     scan, an id in both takes the new version.
+ * No stage compares rows across buckets and bucket size is bounded, so
+ * nothing is O(n²). The two-sided cross-corpus and span operators keep the
+ * count + semi-join guard ([[capBuckets]]): their id spaces may overlap.
  */
 object Dedup {
 
@@ -27,35 +31,33 @@ object Dedup {
     * bucket of size B contributes B² candidate pairs; a bucket that large is
     * dominated by indiscriminate collisions, not near-duplicates). A pair is
     * lost only if EVERY one of its bands lands in a hot bucket. */
-  private def capBuckets(banded: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame = {
+  private[operators] def capBuckets(banded: DataFrame, keys: Seq[String],
+                                    maxBucket: Int): DataFrame = {
     val ok = banded.groupBy(keys.map(col): _*).count()
       .where(col("count") <= maxBucket).drop("count")
     banded.join(ok, keys, "left_semi")
   }
 
-  /** Within-bucket ordered candidate pairs in ONE pass over the banded
-    * index: a bounded heap keeps up to maxBucket+1 member ids per bucket
-    * map-side (BoundedTopK), so the hot-bucket guard FUSES into the
-    * aggregate — a bucket over the cap yields maxBucket+1 entries and is
-    * dropped, keeping members exactly when bucket size ≤ maxBucket, i.e.
-    * bit-identical candidates to the former count + semi-join guard — and
-    * ordered pairs then generate ROW-LOCALLY from the sorted member array
-    * via native slice. Replaces THREE passes over the banded index (the
-    * guard count and both self-join sides) and the join itself with one
-    * partial-combined aggregate, and a degenerate hot bucket never
-    * materializes beyond k+1 heap entries anywhere (the former shape never
-    * materialized it either, but paid two extra passes for that property).
-    * REQUIRES ids unique within a bucket (true for the self-join callers;
-    * the cross-corpus operators keep the two-sided join — their id spaces
-    * may overlap). `payloadCol` rides per member un-compared (lit(0) when
-    * unused; must be a BoundedTopK-serializable primitive).
-    * Returns (id_a, id_b, __p_a, __p_b) with id_a < id_b. */
-  private[operators] def cappedBucketPairs(banded: DataFrame, keys: Seq[String],
-                                idCol: String, payloadCol: Column,
-                                maxBucket: Int): DataFrame =
-    banded.groupBy(keys.map(col): _*)
+  /** Core stage 1: `stage` rows (idCol, [__new], …) fan out to bucket keys
+    * via the generator `keys` (aliased to `keyNames`); a bounded heap keeps
+    * up to maxBucket+1 member ids per bucket map-side (BoundedTopK), so the
+    * hot-bucket guard FUSES into the aggregate (members kept exactly when
+    * bucket size ≤ maxBucket, as a count + semi-join guard would) and ordered
+    * pairs generate row-locally from the sorted member array. One
+    * partial-combined aggregate replaces the guard count, both self-join
+    * sides and the join. Candidates are ids only; `newOnly` keeps pairs with
+    * a `__new` side. Returns distinct (id_a, id_b), id_a ≤ id_b (equal only
+    * when an id repeats in the stage). */
+  private[operators] def cappedBucketPairs(stage: DataFrame, idCol: String,
+                                           keys: Column, keyNames: Seq[String],
+                                           maxBucket: Int,
+                                           newOnly: Boolean): DataFrame = {
+    val payload = if (newOnly) when(col("__new"), lit(1)).otherwise(lit(0)) else lit(0)
+    val pairs = stage.select(Seq(col(idCol)) ++
+        (if (newOnly) Seq(col("__new")) else Nil) :+ keys: _*)
+      .groupBy(keyNames.map(col): _*)
       .agg(graft.functions.BoundedTopK.topK(col(idCol), col(idCol),
-        payloadCol, maxBucket + 1, ascending = true).as("__m"))
+        payload, maxBucket + 1, ascending = true).as("__m"))
       .where(size(col("__m")).between(2, maxBucket))
       .select(posexplode(col("__m")).as(Seq("__i", "__a")), col("__m"))
       .select(col("__a.id").as("id_a"), col("__a.payload").as("__p_a"),
@@ -63,12 +65,63 @@ object Dedup {
           .as("__b"))
       .select(col("id_a"), col("__b.id").as("id_b"),
         col("__p_a"), col("__b.payload").as("__p_b"))
+    (if (newOnly) pairs.where(col("__p_a") === 1 || col("__p_b") === 1) else pairs)
+      .select("id_a", "id_b")
+      .dropDuplicates("id_a", "id_b")
+  }
+
+  /** Core stage 2: join `payloadCol` of `stage` back onto each
+    * candidate side (`<payloadCol>_a`, `<payloadCol>_b`), score the pair and
+    * keep it when `keep(score)` holds. Returns (id_a, id_b, scoreName). */
+  private[operators] def verifyPairs(candidates: DataFrame, stage: DataFrame,
+                                     idCol: String, payloadCol: String,
+                                     scoreName: String,
+                                     score: (Column, Column) => Column,
+                                     keep: Column => Column): DataFrame = {
+    def side(s: String) = stage.select(col(idCol).as(s"id_$s"),
+      col(payloadCol).as(s"${payloadCol}_$s"))
+    candidates
+      .join(side("a"), Seq("id_a"))
+      .join(side("b"), Seq("id_b"))
+      .withColumn(scoreName,
+        score(col(s"${payloadCol}_a"), col(s"${payloadCol}_b")))
+      .where(keep(col(scoreName)))
+      .select("id_a", "id_b", scoreName)
+  }
+
+  /** Core stage 3: persist ONLY the computed new-batch stage; the old side
+    * stays storage-backed (caching it would materialize the corpus), so each
+    * old reference in `pairs` is its own column-pruned scan. An id in both
+    * takes the NEW version (re-ingest upsert). `pairs` gets the
+    * `__new`-tagged union and must keep only pairs touching a new row. */
+  private[operators] def incremental(newStage: DataFrame, oldStage: DataFrame,
+                                     idCol: String)
+                                    (pairs: DataFrame => DataFrame): DataFrame =
+    withPersistedStage(newStage.withColumn("__new", lit(true))) { nw =>
+      pairs(nw.unionByName(oldStage
+        .join(nw.select(col(idCol)), Seq(idCol), "left_anti")
+        .withColumn("__new", lit(false))))
+    }
+
+  /** |a ∩ b| / |a ∪ b| over two distinct-element arrays. */
+  private[operators] def jaccard(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
+
+  /** (chunk, key) generator over a long: `chunks` disjoint `bitsPer`-bit
+    * slices — any two values within Hamming distance < chunks share at least
+    * one slice exactly (pigeonhole), so the slices are recall-safe buckets. */
+  private[operators] def chunkKeys(bits: Column, chunks: Int,
+                                   bitsPer: Int): Column =
+    posexplode(transform(sequence(lit(0), lit(chunks - 1)),
+      c => call_function("shiftright", bits, c * bitsPer)
+        .bitwiseAND(lit((1L << bitsPer) - 1)))).as(Seq("chunk", "key"))
 
   /** Run `build` with `stage` persisted, then materialize the (small) pair
     * output and release the stage. The candidate-generation operators read
-    * their signature stage 3–6× (capBuckets count + probe, the pair self-join's
-    * two sides, the verify join-backs) — without a persist each pass re-runs
-    * the CPU-heavy shingle/signature computation over the full corpus, which
+    * their signature stage 3–6× (banding and both verify join-backs; a
+    * capBuckets guard's count, probe and both join sides) — without a
+    * persist each pass re-runs the CPU-heavy signature computation over the
+    * full corpus, which
     * at 100 TB multiplies the whole job's scan cost. The returned pairs are
     * eagerly localCheckpoint'ed (tiny vs the corpus) so the caller's laziness
     * can't resurrect the un-persisted lineage, and downstream iteration
@@ -134,7 +187,7 @@ object Dedup {
       shingleN: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
       threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
     val sigStage = minhashSignatures(df, idCol, textCol, shingleN,
-      bands * rowsPerBand).withColumn("__new", lit(true))
+      bands * rowsPerBand)
     withPersistedStage(sigStage) { withSig =>
       lshPairsOver(withSig, idCol, bands, rowsPerBand, threshold, maxBucket,
         newOnly = false)
@@ -193,20 +246,12 @@ object Dedup {
       newBatch: DataFrame, oldSigs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
       threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
-    val newSigs = minhashSignatures(newBatch, idCol, textCol, shingleN,
-      bands * rowsPerBand).withColumn("__new", lit(true))
-    // Persist ONLY the computed (new-batch) signatures. The old side is
-    // STORAGE-backed — caching it would materialize the fat `sh` column for
-    // the whole corpus, exactly what incremental is meant to avoid; instead
-    // each old reference below is its own column-pruned scan (banding reads
-    // (id, sig); the verify join-backs read (id, sh) for candidate ids) —
-    // asserted on ReadSchema in DedupSpec.
-    withPersistedStage(newSigs) { nw =>
-      val old = oldSigs.select(col(idCol), col("sh"), col("sig"))
-        .join(nw.select(col(idCol)), Seq(idCol), "left_anti")
-        .withColumn("__new", lit(false))
-      lshPairsOver(nw.unionByName(old), idCol, bands, rowsPerBand,
-        threshold, maxBucket, newOnly = true)
+    // old-side scans are column-pruned per use (DedupSpec asserts ReadSchema)
+    incremental(
+      minhashSignatures(newBatch, idCol, textCol, shingleN, bands * rowsPerBand),
+      oldSigs.select(col(idCol), col("sh"), col("sig")), idCol) { all =>
+      lshPairsOver(all, idCol, bands, rowsPerBand, threshold, maxBucket,
+        newOnly = true)
     }
   }
 
@@ -241,7 +286,8 @@ object Dedup {
       right.select(col(rightId).as("__id"), col(rightText).as("__text")),
       "__id", "__text", shingleN, numHashes).withColumn("__new", lit(false))
     withPersistedStages(Seq(ls, rs)) { case Seq(l, r) =>
-      val banded = bandBuckets(l.unionByName(r), "__id", bands, rowsPerBand)
+      val banded = l.unionByName(r).select(col("__id"), col("__new"),
+        bandKeys(col("sig"), bands, rowsPerBand))
       val capped = capBuckets(banded, Seq("band", "bucket"), maxBucket)
       val a = capped.where(col("__new"))
         .select(col("band"), col("bucket"), col("__id").as("id_l"))
@@ -251,9 +297,7 @@ object Dedup {
         .select("id_l", "id_r").dropDuplicates("id_l", "id_r")
         .join(l.select(col("__id").as("id_l"), col("sh").as("sh_l")), Seq("id_l"))
         .join(r.select(col("__id").as("id_r"), col("sh").as("sh_r")), Seq("id_r"))
-        .withColumn("jaccard",
-          size(array_intersect(col("sh_l"), col("sh_r"))).cast("double") /
-            size(array_union(col("sh_l"), col("sh_r"))))
+        .withColumn("jaccard", jaccard(col("sh_l"), col("sh_r")))
         .where(col("jaccard") >= threshold)
         .select("id_l", "id_r", "jaccard")
     }
@@ -276,48 +320,28 @@ object Dedup {
     left.join(contaminated, Seq(leftId), "left_anti")
   }
 
-  /** Band-bucket explode over a (idCol, sig, __new) signature stage: one
-    * (band, bucket) row per band, bucket = xxhash64 over the band's
-    * signature slice. Shared by the self-join ([[lshPairsOver]]) and the
-    * cross-corpus ([[minhashLshPairsAcross]]) candidate generators. */
-  private def bandBuckets(withSig: DataFrame, idCol: String, bands: Int,
-                          rowsPerBand: Int): DataFrame =
-    withSig.select(col(idCol), col("__new"),
-      posexplode(transform(
-        sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(concat_ws(",",
-          transform(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)),
-            _.cast("string")))))).as(Seq("band", "bucket")))
+  /** (band, bucket) generator over a minhash signature: one row per band,
+    * bucket = xxhash64 over the band's signature slice. Shared by the
+    * self-join ([[lshPairsOver]]) and the cross-corpus
+    * ([[minhashLshPairsAcross]]) candidate generators. */
+  private def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    posexplode(transform(
+      sequence(lit(0), lit(bands - 1)),
+      b => xxhash64(concat_ws(",",
+        transform(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)),
+          _.cast("string")))))).as(Seq("band", "bucket"))
 
-  /** Shared LSH banding + capped bucket self-join + exact-Jaccard verify over
-    * a (idCol, sh, sig, __new) signature stage. `newOnly` keeps only pairs
-    * with at least one `__new` side (the incremental contract). Does NOT
-    * persist: callers decide which part of the stage is worth caching
-    * (computed signatures yes, storage-backed ones no). */
+  /** LSH banding → capped pairs → exact-Jaccard verify over a
+    * (idCol, sh, sig, [__new]) signature stage. Does NOT persist: callers
+    * decide which part of the stage is worth caching (computed signatures
+    * yes, storage-backed ones no). */
   private def lshPairsOver(withSig: DataFrame, idCol: String, bands: Int,
                            rowsPerBand: Int, threshold: Double,
-                           maxBucket: Int, newOnly: Boolean): DataFrame = {
-    val banded = bandBuckets(withSig, idCol, bands, rowsPerBand)
-    // one-pass capped pair generation (see cappedBucketPairs) — candidates
-    // ride as IDS ONLY; the shingle arrays join back once per surviving
-    // pair, never through the bucket machinery or the dedup shuffle
-    val rawPairs = cappedBucketPairs(banded, Seq("band", "bucket"), idCol,
-      when(col("__new"), lit(1)).otherwise(lit(0)), maxBucket)
-    val candidates =
-      (if (newOnly) rawPairs.where(col("__p_a") === 1 || col("__p_b") === 1)
-       else rawPairs)
-        .select("id_a", "id_b")
-        .dropDuplicates("id_a", "id_b")
-    val base = withSig.select(col(idCol), col("sh"))
-    candidates
-      .join(base.select(col(idCol).as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(base.select(col(idCol).as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
+                           maxBucket: Int, newOnly: Boolean): DataFrame =
+    verifyPairs(
+      cappedBucketPairs(withSig, idCol, bandKeys(col("sig"), bands, rowsPerBand),
+        Seq("band", "bucket"), maxBucket, newOnly),
+      withSig, idCol, "sh", "jaccard", jaccard, _ >= threshold)
 
   /** Persist [[minhashSignatures]] of `df` into a [[graft.sink.SnapshotSink]]
     * table, resume-safe: only ids not already committed are shingled +
@@ -333,6 +357,7 @@ object Dedup {
   def persistMinhashSignatures(df: DataFrame, table: String, idCol: String,
                                textCol: String, shingleN: Int = 3,
                                numHashes: Int = 64): Unit = {
+    requireSignatureFormat(table, shingleN, numHashes)
     val sigs = minhashSignatures(df, idCol, textCol, shingleN, numHashes)
     graft.sink.SnapshotSink.appendMissing(sigs, table, idCol, Seq.empty,
       lineage = Map("op" -> "minhash_signatures",
@@ -348,22 +373,26 @@ object Dedup {
   def readMinhashSignatures(spark: org.apache.spark.sql.SparkSession,
                             table: String, shingleN: Int = 3,
                             numHashes: Int = 64): DataFrame = {
+    requireSignatureFormat(table, shingleN, numHashes)
+    graft.sink.SnapshotSink.read(spark, table)
+  }
+
+  /** Shared by the write and read paths, so an append never mixes formats
+    * and the newest snapshot speaks for the whole table: it must record the
+    * caller's shingle_n / num_hashes and the xxh64s42 `sh` encoding (no
+    * sh_encoding = the pre-hashed format, which stores strings). */
+  private def requireSignatureFormat(table: String, shingleN: Int,
+                                     numHashes: Int): Unit =
     graft.sink.SnapshotSink.lastSnapshot(table).foreach { snap =>
       val (sn, nh) = (snap.lineage.get("shingle_n"), snap.lineage.get("num_hashes"))
       require(sn.forall(_ == shingleN.toString) && nh.forall(_ == numHashes.toString),
         s"signature table $table was built with shingle_n=${sn.orNull}, " +
-          s"num_hashes=${nh.orNull}; consumer expects $shingleN/$numHashes")
-      // round-8 storage change: `sh` is the xxhash64 image of the shingle
-      // set (array<long>). A table written before that (no sh_encoding key)
-      // stores strings — refuse it loudly here instead of failing analysis
-      // deep inside the verify join.
+          s"num_hashes=${nh.orNull}; caller expects $shingleN/$numHashes")
       require(snap.lineage.get("sh_encoding").contains("xxh64s42"),
         s"signature table $table stores sh as " +
           s"${snap.lineage.getOrElse("sh_encoding", "strings (pre-hashed-sh format)")}; " +
-          "this consumer reads xxh64s42 hashed shingles — re-sign the corpus")
+          "this caller uses xxh64s42 hashed shingles — re-sign the corpus")
     }
-    graft.sink.SnapshotSink.read(spark, table)
-  }
 
   /** SimHash per document (row-local). */
   def simhashTable(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -395,10 +424,7 @@ object Dedup {
                      maxHamming: Int = 3, chunks: Int = 4,
                      maxBucket: Int = 1000): DataFrame = {
     require(maxHamming < chunks, "banding guarantee needs maxHamming < chunks")
-    val sigs = signatures
-      .select(col(idCol), col(bitsCol).cast("long").as("__sig"))
-      .withColumn("__new", lit(true))
-    withPersistedStage(sigs) { sims =>
+    withPersistedStage(hammingStage(signatures, idCol, bitsCol)) { sims =>
       hammingPairsOver(sims, idCol, maxHamming, chunks, maxBucket,
         newOnly = false)
     }
@@ -423,43 +449,30 @@ object Dedup {
                                 maxHamming: Int = 3, chunks: Int = 4,
                                 maxBucket: Int = 1000): DataFrame = {
     require(maxHamming < chunks, "banding guarantee needs maxHamming < chunks")
-    val nw = newSignatures
-      .select(col(idCol), col(bitsCol).cast("long").as("__sig"))
-      .withColumn("__new", lit(true))
-    withPersistedStage(nw) { n =>
-      val old = oldSignatures
-        .select(col(idCol), col(bitsCol).cast("long").as("__sig"))
-        .join(n.select(col(idCol)), Seq(idCol), "left_anti")
-        .withColumn("__new", lit(false))
-      hammingPairsOver(n.unionByName(old), idCol, maxHamming, chunks,
-        maxBucket, newOnly = true)
+    incremental(hammingStage(newSignatures, idCol, bitsCol),
+      hammingStage(oldSignatures, idCol, bitsCol), idCol) { all =>
+      hammingPairsOver(all, idCol, maxHamming, chunks, maxBucket,
+        newOnly = true)
     }
   }
 
-  /** Shared Hamming banding + capped bucket join + exact verify over a
-    * (idCol, __sig, __new) stage; `newOnly` keeps pairs with ≥1 new side. */
+  private def hammingStage(signatures: DataFrame, idCol: String,
+                           bitsCol: String): DataFrame =
+    signatures.select(col(idCol), col(bitsCol).cast("long").as("__sig"))
+
+  /** Hamming chunk banding → capped pairs → exact-Hamming verify over an
+    * (idCol, __sig, [__new]) stage. A door micro-batch can repeat an id,
+    * which yields (x, x) candidates and a join-back row per copy: self-pairs
+    * drop and verified pairs dedup to one row per pair. */
   private def hammingPairsOver(sims: DataFrame, idCol: String,
                                maxHamming: Int, chunks: Int, maxBucket: Int,
-                               newOnly: Boolean): DataFrame = {
-    val bitsPer = 64 / chunks
-    val banded = sims.select(col(idCol), col("__sig"), col("__new"),
-      posexplode(transform(
-        sequence(lit(0), lit(chunks - 1)),
-        c => call_function("shiftright", col("__sig"), c * bitsPer)
-          .bitwiseAND(lit((1L << bitsPer) - 1)))).as(Seq("chunk", "key")))
-    val capped = capBuckets(banded, Seq("chunk", "key"), maxBucket)
-    val a = capped.select(col("chunk"), col("key"), col(idCol).as("id_a"),
-      col("__sig").as("sh_a"), col("__new").as("__new_a"))
-    val b = capped.select(col("chunk"), col("key"), col(idCol).as("id_b"),
-      col("__sig").as("sh_b"), col("__new").as("__new_b"))
-    val joined = a.join(b, Seq("chunk", "key"))
+                               newOnly: Boolean): DataFrame =
+    verifyPairs(
+      cappedBucketPairs(sims, idCol, chunkKeys(col("__sig"), chunks, 64 / chunks),
+        Seq("chunk", "key"), maxBucket, newOnly),
+      sims, idCol, "__sig", "hamming", TextOps.hamming64, _ <= maxHamming)
       .where(col("id_a") < col("id_b"))
-    (if (newOnly) joined.where(col("__new_a") || col("__new_b")) else joined)
       .dropDuplicates("id_a", "id_b")
-      .withColumn("hamming", TextOps.hamming64(col("sh_a"), col("sh_b")))
-      .where(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-  }
 
   /**
    * Distributed connected components over a near-dup pair list — pairs say
@@ -671,18 +684,37 @@ object Dedup {
         threshold, maxBucket))
 
   /**
-   * Exact n-gram Jaccard pairs via an inverted-index self-join: explode
-   * distinct shingles, join docs sharing a shingle, dedupe pairs, compute
-   * exact Jaccard. Exact but O(pairs-sharing-a-shingle) — the verification
-   * oracle for the LSH paths, or a primary dedup at moderate scale.
+   * Exact n-gram Jaccard pairs over the inverted index: the candidate core
+   * with each distinct shingle as a bucket, then exact Jaccard. Exact but
+   * O(pairs-sharing-a-shingle) — the verification oracle for the LSH paths,
+   * or a primary dedup at moderate scale.
    *
-   * `maxShingleDf` caps a shingle's document frequency before the self-join
-   * (same guard as [[capBuckets]] on the LSH paths): one stop-shingle shared
+   * `maxShingleDf` caps a shingle's document frequency before pairing (the
+   * same hot-bucket purge as the LSH paths): one stop-shingle shared
    * by 1M docs would otherwise contribute 10¹² candidate pairs. A dropped
    * shingle loses a pair only if it was the pair's ONLY shared shingle — and
    * a shingle that common carries ~zero Jaccard evidence. Results below the
    * cap are exact (the driver oracle stays green).
    */
+  def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
+                        shingleN: Int = 3, threshold: Double = 0.5,
+                        maxShingleDf: Int = 10000): DataFrame = {
+    // hashed shingle sets (see crossNgramOverlap): Jaccard over the xxhash64
+    // image of the string set is value-identical up to ≈ n²/2⁶⁵ collision
+    // odds per pair; the inverted index and the verify join-backs move
+    // 8-byte longs instead of n-gram strings
+    val shingled = df.select(col(idCol),
+      graft.functions.TextExpressions.word_shingles_hashed(col(textCol), shingleN,
+        distinct = true).as("sh"))
+      .where(size(col("sh")) > 0)
+    withPersistedStage(shingled) { base =>
+      verifyPairs(
+        cappedBucketPairs(base, idCol, explode(col("sh")).as("shingle"),
+          Seq("shingle"), maxShingleDf, newOnly = false),
+        base, idCol, "sh", "jaccard", jaccard, _ >= threshold)
+    }
+  }
+
   /**
    * Cross-corpus n-gram overlap — the decontamination primitive: pairs
    * (id_l, id_r) where the LEFT (training) document contains at least
@@ -742,28 +774,6 @@ object Dedup {
     left.join(contaminated, Seq(leftId), "left_anti")
   }
 
-  /**
-   * [[decontaminate]] with a broadcast-Bloom prefilter on the training side —
-   * the 100 TB shape. Plain `decontaminate` explodes EVERY training
-   * document's shingles into the inverted-index exchange even though almost
-   * all of a web corpus shares nothing with a benchmark suite; here a Bloom
-   * filter over the (small, by contract) benchmark shingle set rides ONE
-   * broadcast and each training document is tested ROW-LOCALLY at the scan:
-   * only documents with at least `ceil(threshold · min_b|sh_b|)` possible
-   * shingle hits proceed to the exact containment join. That bound is
-   * exactly conservative — containment ≥ θ against some benchmark doc b
-   * needs ≥ ceil(θ·|sh_b|) ≥ ceil(θ·min_b|sh_b|) shared shingles, and Bloom
-   * counts have no false negatives — so the output is IDENTICAL to
-   * [[decontaminate]]'s (false positives only send a few extra docs to the
-   * verify join, which rejects them).
-   *
-   * One caveat keeps it honest: the `maxShingleDf` stop-shingle cap inside
-   * the verify join is computed over the SURVIVOR subset, not the full
-   * corpus — a shingle ubiquitous corpus-wide but rare among survivors can
-   * participate where plain `decontaminate` would cap it. The cap is a
-   * quadratic-blowup guard, not a semantic knob; with the default 10⁴ it
-   * binds on neither path in practice (parity is asserted in DedupSpec).
-   */
   /** The broadcastable "contamination door" model [[benchmarkBloom]] builds:
     * one Bloom filter over the benchmark suite's distinct shingles plus the
     * conservative hit bound — a document with `bloom_hits < minHits` is
@@ -817,6 +827,28 @@ object Dedup {
       graft.functions.TextExpressions.word_shingles_hashed(text, door.shingleN,
         distinct = true), door.bloom) >= door.minHits
 
+  /**
+   * [[decontaminate]] with a broadcast-Bloom prefilter on the training side —
+   * the 100 TB shape. Plain `decontaminate` explodes EVERY training
+   * document's shingles into the inverted-index exchange even though almost
+   * all of a web corpus shares nothing with a benchmark suite; here a Bloom
+   * filter over the (small, by contract) benchmark shingle set rides ONE
+   * broadcast and each training document is tested ROW-LOCALLY at the scan:
+   * only documents with at least `ceil(threshold · min_b|sh_b|)` possible
+   * shingle hits proceed to the exact containment join. That bound is
+   * exactly conservative — containment ≥ θ against some benchmark doc b
+   * needs ≥ ceil(θ·|sh_b|) ≥ ceil(θ·min_b|sh_b|) shared shingles, and Bloom
+   * counts have no false negatives — so the output is IDENTICAL to
+   * [[decontaminate]]'s (false positives only send a few extra docs to the
+   * verify join, which rejects them).
+   *
+   * One caveat keeps it honest: the `maxShingleDf` stop-shingle cap inside
+   * the verify join is computed over the SURVIVOR subset, not the full
+   * corpus — a shingle ubiquitous corpus-wide but rare among survivors can
+   * participate where plain `decontaminate` would cap it. The cap is a
+   * quadratic-blowup guard, not a semantic knob; with the default 10⁴ it
+   * binds on neither path in practice (parity is asserted in DedupSpec).
+   */
   def decontaminateBloom(left: DataFrame, right: DataFrame,
                          leftId: String, rightId: String,
                          leftText: String, rightText: String,
@@ -832,6 +864,35 @@ object Dedup {
           .select(col("id_l").as(leftId)).distinct()
         left.join(contaminated, Seq(leftId), "left_anti")
     }
+
+  /** Positional k-gram occurrence stage shared by the span operators:
+    * (id, pos, dual content fingerprint) — the shuffle payload never
+    * includes text. */
+  private def positionalKgrams(df: DataFrame, idCol: String, textCol: String,
+                               k: Int): DataFrame = {
+    require(k >= 2, s"repeatedSpans: k must be >= 2, got $k")
+    df.select(col(idCol).as("id"),
+        posexplode(graft.functions.TextExpressions.word_shingles(
+          col(textCol), k)).as(Seq("pos", "sh")))
+      .select(col("id"), col("pos"),
+        xxhash64(col("sh")).as("h64"), sha2(col("sh"), 256).as("hsha"))
+  }
+
+  /** Maximal-span coalescing shared by the span operators: occurrence-match
+    * rows (id_a, pos_a, id_b, pos_b, diag) → one row per maximal run of
+    * consecutive pos_a per (id_a, id_b, diag) — classic gaps-and-islands via
+    * a Window PARTITIONED BY the pair+diagonal (bounded partitions, never
+    * the unpartitioned single-task trap). `span_tokens` = run length+k−1. */
+  private def spanIslands(matches: DataFrame, k: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("id_a"), col("id_b"), col("diag"))
+      .orderBy(col("pos_a"))
+    matches
+      .withColumn("__island", col("pos_a") - row_number().over(w))
+      .groupBy(col("id_a"), col("id_b"), col("diag"), col("__island"))
+      .agg(min(col("pos_a")).as("start_a"), min(col("pos_b")).as("start_b"),
+        (count(lit(1)) + (k - 1)).cast("int").as("span_tokens"))
+  }
 
   /**
    * Cross-document EXACT repeated spans (Lee et al. 2021, arXiv:2107.06499
@@ -862,35 +923,6 @@ object Dedup {
    * Returns (id_a, start_a, id_b, start_b, span_tokens), token positions
    * 0-based. Within-document repeats are out of scope (id_a < id_b).
    */
-  /** Positional k-gram occurrence stage shared by the span operators:
-    * (id, pos, dual content fingerprint) — the shuffle payload never
-    * includes text. */
-  private def positionalKgrams(df: DataFrame, idCol: String, textCol: String,
-                               k: Int): DataFrame = {
-    require(k >= 2, s"repeatedSpans: k must be >= 2, got $k")
-    df.select(col(idCol).as("id"),
-        posexplode(graft.functions.TextExpressions.word_shingles(
-          col(textCol), k)).as(Seq("pos", "sh")))
-      .select(col("id"), col("pos"),
-        xxhash64(col("sh")).as("h64"), sha2(col("sh"), 256).as("hsha"))
-  }
-
-  /** Maximal-span coalescing shared by the span operators: occurrence-match
-    * rows (id_a, pos_a, id_b, pos_b, diag) → one row per maximal run of
-    * consecutive pos_a per (id_a, id_b, diag) — classic gaps-and-islands via
-    * a Window PARTITIONED BY the pair+diagonal (bounded partitions, never
-    * the unpartitioned single-task trap). `span_tokens` = run length+k−1. */
-  private def spanIslands(matches: DataFrame, k: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id_a"), col("id_b"), col("diag"))
-      .orderBy(col("pos_a"))
-    matches
-      .withColumn("__island", col("pos_a") - row_number().over(w))
-      .groupBy(col("id_a"), col("id_b"), col("diag"), col("__island"))
-      .agg(min(col("pos_a")).as("start_a"), min(col("pos_b")).as("start_b"),
-        (count(lit(1)) + (k - 1)).cast("int").as("span_tokens"))
-  }
-
   def repeatedSpans(df: DataFrame, idCol: String, textCol: String,
                     k: Int, maxOccurrences: Int = 1000): DataFrame = {
     val occ = positionalKgrams(df, idCol, textCol, k)
@@ -987,37 +1019,6 @@ object Dedup {
       spanIslands(matches, k)
         .select(col("id_a").as("id"), col("start_a"), col("start_b"),
           col("span_tokens"))
-    }
-  }
-
-  def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int = 3, threshold: Double = 0.5,
-                        maxShingleDf: Int = 10000): DataFrame = {
-    // hashed shingle sets (see crossNgramOverlap): Jaccard over the xxhash64
-    // image of the string set is value-identical up to ≈ n²/2⁶⁵ collision
-    // odds per pair; the inverted-index self-join and the verify join-backs
-    // move 8-byte longs instead of n-gram strings
-    val shingled = df.select(col(idCol),
-      graft.functions.TextExpressions.word_shingles_hashed(col(textCol), shingleN,
-        distinct = true).as("sh"))
-      .where(size(col("sh")) > 0)
-    withPersistedStage(shingled) { base =>
-      // one-pass capped pair generation over the inverted index (see
-      // cappedBucketPairs — the former count+semi-join guard and the
-      // x×y self-join read the exploded index three times)
-      val pairs = cappedBucketPairs(
-        base.select(col(idCol), explode(col("sh")).as("shingle")),
-        Seq("shingle"), idCol, lit(0), maxShingleDf)
-        .select("id_a", "id_b")
-        .dropDuplicates("id_a", "id_b")
-      pairs
-        .join(base.select(col(idCol).as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-        .join(base.select(col(idCol).as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-        .withColumn("jaccard",
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b"))))
-        .where(col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     }
   }
 }

@@ -321,7 +321,7 @@ object Similarity {
                              dim: Int, threshold: Double = 0.95,
                              bits: Int = 32, chunks: Int = 4,
                              seed: Long = 42L, maxBucket: Int = 1000): DataFrame =
-    graft.operators.Dedup.connectedComponents(
+    Dedup.connectedComponents(
       embeddingNearDupPairs(df, idCol, vecCol, dim, threshold, bits, chunks,
         seed, maxBucket))
 
@@ -331,36 +331,18 @@ object Similarity {
                             dim: Int, threshold: Double = 0.95,
                             bits: Int = 32, chunks: Int = 4,
                             seed: Long = 42L, maxBucket: Int = 1000): DataFrame = {
-    val bitsPer = bits / chunks
     val hashStage = df.select(col(idCol), col(vecCol).as("v"),
       hyperplaneHash(col(vecCol), dim, bits, seed).as("hh"))
-    // the O(bits·dim)-per-row hash stage is read by the bucket-count guard,
-    // its semi-join probe, and both sides of the pair join — persist it once
-    // (Dedup.withPersistedStage rationale)
-    graft.operators.Dedup.withPersistedStage(hashStage) { hashed =>
-      // ids-only candidate generation (the lshPairsOver discipline, guide
-      // §8: decide with small rows, move the payload once): the banding
-      // explode and the bucket self-join used to carry the VECTOR ×chunks —
-      // at corpus scale that is chunks× the embedding bytes through two
-      // exchanges for rows that mostly never become candidates. Vectors now
-      // join back from the persisted stage once per surviving candidate.
-      val banded0 = hashed.select(col(idCol),
-        posexplode(transform(sequence(lit(0), lit(chunks - 1)),
-          c => call_function("shiftright", col("hh"), c * bitsPer)
-            .bitwiseAND(lit((1L << bitsPer) - 1)))).as(Seq("chunk", "key")))
-      // one-pass capped pair generation (Dedup.cappedBucketPairs): the
-      // hot-bucket guard fuses into the bounded-heap aggregate and ordered
-      // pairs generate row-locally — the former count+semi-join guard and
-      // a×b self-join read the banded index three times
-      graft.operators.Dedup.cappedBucketPairs(banded0, Seq("chunk", "key"),
-          idCol, lit(0), maxBucket)
-        .select("id_a", "id_b")
-        .dropDuplicates("id_a", "id_b")
-        .join(hashed.select(col(idCol).as("id_a"), col("v").as("v_a")), Seq("id_a"))
-        .join(hashed.select(col(idCol).as("id_b"), col("v").as("v_b")), Seq("id_b"))
-        .withColumn("cosine", cosine(col("v_a"), col("v_b")))
-        .where(col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+    // the O(bits·dim)-per-row hash stage feeds the banding and both verify
+    // join-backs — persist it once (Dedup.withPersistedStage rationale).
+    // Candidates ride as ids only: vectors join back once per surviving
+    // candidate instead of riding the banding explode ×chunks.
+    Dedup.withPersistedStage(hashStage) { hashed =>
+      Dedup.verifyPairs(
+        Dedup.cappedBucketPairs(hashed, idCol,
+          Dedup.chunkKeys(col("hh"), chunks, bits / chunks),
+          Seq("chunk", "key"), maxBucket, newOnly = false),
+        hashed, idCol, "v", "cosine", cosine, _ >= threshold)
     }
   }
 
@@ -388,27 +370,31 @@ object Similarity {
   def semanticNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                            centroids: Array[Array[Double]],
                            threshold: Double = 0.95,
-                           maxBucket: Int = 10000): DataFrame = {
-    val listed = df.select(col(idCol), col(vecCol).as("v"),
-      withListId(df, vecCol, centroids).as("list_id"))
-    graft.operators.Dedup.withPersistedStage(listed) { ls =>
-      val ok = ls.groupBy(col("list_id")).count()
-        .where(col("count") <= maxBucket).drop("count")
-      val capped = ls.join(ok, Seq("list_id"), "left_semi")
-      // vectors deliberately RIDE the (single, disjoint-key) cluster join:
-      // unlike the banded LSH paths there is no cross-band candidate dedup
-      // to shrink behind, so an ids-only pass + vector join-backs would
-      // re-exchange the corpus for every candidate row (measured 1.4×
-      // slower) — every within-cluster pair needs both vectors exactly once
-      // and the cluster join delivers them without a second pass
-      val a = capped.select(col("list_id"), col(idCol).as("id_a"), col("v").as("v_a"))
-      val b = capped.select(col("list_id"), col(idCol).as("id_b"), col("v").as("v_b"))
-      a.join(b, Seq("list_id"))
-        .where(col("id_a") < col("id_b"))
-        .withColumn("cosine", cosine(col("v_a"), col("v_b")))
-        .where(col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+                           maxBucket: Int = 10000): DataFrame =
+    Dedup.withPersistedStage(semanticAssignments(df, idCol, vecCol, centroids)) {
+      semanticPairsOver(_, idCol, threshold, maxBucket, newOnly = false)
     }
+
+  /** Capped cluster self-join + exact-cosine verify over an
+    * (idCol, v, list_id, [__new]) assignment stage; `newOnly` keeps pairs
+    * with a `__new` side. Vectors deliberately RIDE the single, disjoint-key
+    * cluster join: with no cross-band candidate dedup to shrink behind,
+    * ids-only pairs ([[Dedup.cappedBucketPairs]]) + vector join-backs would
+    * re-exchange the corpus per candidate (measured 1.4× slower), so the
+    * cluster cap stays the count + semi-join guard. */
+  private def semanticPairsOver(stage: DataFrame, idCol: String,
+                                threshold: Double, maxBucket: Int,
+                                newOnly: Boolean): DataFrame = {
+    val capped = Dedup.capBuckets(stage, Seq("list_id"), maxBucket)
+    def side(s: String) = capped.select(Seq(col("list_id"),
+      col(idCol).as(s"id_$s"), col("v").as(s"v_$s")) ++
+      (if (newOnly) Seq(col("__new").as(s"__new_$s")) else Nil): _*)
+    val joined = side("a").join(side("b"), Seq("list_id"))
+      .where(col("id_a") < col("id_b"))
+    (if (newOnly) joined.where(col("__new_a") || col("__new_b")) else joined)
+      .withColumn("cosine", cosine(col("v_a"), col("v_b")))
+      .where(col("cosine") >= threshold)
+      .select("id_a", "id_b", "cosine")
   }
 
   /** The (id, vector, list_id) assignment stage [[semanticNearDupPairs]]
@@ -450,6 +436,7 @@ object Similarity {
   def persistSemanticAssignments(df: DataFrame, table: String, idCol: String,
                                  vecCol: String,
                                  centroids: Array[Array[Double]]): Unit = {
+    requireAssignmentModel(table, centroids)
     val assign = semanticAssignments(df, idCol, vecCol, centroids)
     graft.sink.SnapshotSink.appendMissing(assign, table, idCol, Seq.empty,
       lineage = Map("op" -> "semantic_assignments",
@@ -464,15 +451,21 @@ object Similarity {
   def readSemanticAssignments(spark: org.apache.spark.sql.SparkSession,
                               table: String,
                               centroids: Array[Array[Double]]): DataFrame = {
-    graft.sink.SnapshotSink.lastSnapshot(table).foreach { snap =>
-      val fp = snap.lineage.get("centroid_md5")
-      require(fp.forall(_ == centroidFingerprint(centroids)),
-        s"assignment table $table was built under centroid model " +
-          s"${fp.orNull}; the consumer's model differs — incremental " +
-          "SemDeDup requires one model across old and new")
-    }
+    requireAssignmentModel(table, centroids)
     graft.sink.SnapshotSink.read(spark, table)
   }
+
+  /** Shared by the write and read paths, so an append never mixes models:
+    * the newest snapshot must record the caller's centroid fingerprint. */
+  private def requireAssignmentModel(table: String,
+                                     centroids: Array[Array[Double]]): Unit =
+    graft.sink.SnapshotSink.lastSnapshot(table).foreach { snap =>
+      val fp = snap.lineage.get("centroid_md5")
+      require(fp.contains(centroidFingerprint(centroids)),
+        s"assignment table $table was built under centroid model " +
+          s"${fp.getOrElse("(unrecorded)")}; the caller's model differs — " +
+          "incremental SemDeDup requires one model across old and new")
+    }
 
   /**
    * INCREMENTAL SemDeDup — [[semanticNearDupPairs]] against a persisted
@@ -495,32 +488,11 @@ object Similarity {
                                       idCol: String, vecCol: String,
                                       centroids: Array[Array[Double]],
                                       threshold: Double = 0.95,
-                                      maxBucket: Int = 10000): DataFrame = {
-    val nw = semanticAssignments(newBatch, idCol, vecCol, centroids)
-      .withColumn("__new", lit(true))
-    graft.operators.Dedup.withPersistedStage(nw) { n =>
-      // vectors ride the cluster join (see semanticNearDupPairs: with no
-      // cross-band dedup, ids-only + join-backs re-exchange the corpus per
-      // candidate — measured slower)
-      val old = oldAssignments.select(col(idCol), col("v"), col("list_id"))
-        .join(n.select(col(idCol)), Seq(idCol), "left_anti")
-        .withColumn("__new", lit(false))
-      val all = n.unionByName(old)
-      val ok = all.groupBy(col("list_id")).count()
-        .where(col("count") <= maxBucket).drop("count")
-      val capped = all.join(ok, Seq("list_id"), "left_semi")
-      val a = capped.select(col("list_id"), col(idCol).as("id_a"),
-        col("v").as("v_a"), col("__new").as("__new_a"))
-      val b = capped.select(col("list_id"), col(idCol).as("id_b"),
-        col("v").as("v_b"), col("__new").as("__new_b"))
-      a.join(b, Seq("list_id"))
-        .where(col("id_a") < col("id_b"))
-        .where(col("__new_a") || col("__new_b"))
-        .withColumn("cosine", cosine(col("v_a"), col("v_b")))
-        .where(col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+                                      maxBucket: Int = 10000): DataFrame =
+    Dedup.incremental(semanticAssignments(newBatch, idCol, vecCol, centroids),
+      oldAssignments.select(col(idCol), col("v"), col("list_id")), idCol) {
+      semanticPairsOver(_, idCol, threshold, maxBucket, newOnly = true)
     }
-  }
 
   /** [[semanticNearDupPairs]] → connected components: (id, group_id =
     * min member id) clusters, ready for `Dedup.keepRepresentatives` /
@@ -529,6 +501,6 @@ object Similarity {
                             centroids: Array[Array[Double]],
                             threshold: Double = 0.95,
                             maxBucket: Int = 10000): DataFrame =
-    graft.operators.Dedup.connectedComponents(
+    Dedup.connectedComponents(
       semanticNearDupPairs(df, idCol, vecCol, centroids, threshold, maxBucket))
 }

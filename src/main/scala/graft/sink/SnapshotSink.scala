@@ -488,7 +488,7 @@ object SnapshotSink {
     sb.toString
   }
 
-  private def deleteRecursively(p: Path): Unit = {
+  private[graft] def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
   }

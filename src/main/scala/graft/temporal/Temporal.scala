@@ -195,7 +195,8 @@ object Temporal {
 
   /**
    * Sessionize: a new session starts when the gap to the previous event of the
-   * same entity exceeds `gapSeconds`. session_seq = running count of
+   * same entity exceeds `gapSeconds` — exactly, to the microsecond (a gap of
+   * gapSeconds + 0.4 s is a new session). session_seq = running count of
    * session-starts (1-based); session_id = "<entity>#<seq>".
    */
   def sessionize(df: DataFrame, keys: Seq[String], tsCol: String,
@@ -205,10 +206,11 @@ object Temporal {
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy((tsCol +: tieBreakCols).map(col): _*)
     val prevTs = lag(col(tsCol), 1).over(w)
-    // double cast: TIMESTAMP_NTZ → TIMESTAMP → epoch seconds (UTC session)
+    // TIMESTAMP_NTZ → TIMESTAMP (UTC session) → epoch microseconds: a cast
+    // to long would floor both sides to whole seconds first
     val isNew = when(prevTs.isNull, 1)
-      .when(col(tsCol).cast("timestamp").cast("long") -
-        prevTs.cast("timestamp").cast("long") > gapSeconds, 1)
+      .when(unix_micros(col(tsCol).cast("timestamp")) -
+        unix_micros(prevTs.cast("timestamp")) > gapSeconds * 1000000L, 1)
       .otherwise(0)
     val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     df.withColumn("__is_new_session", isNew)

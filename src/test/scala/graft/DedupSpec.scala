@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -249,6 +251,54 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("persistMinhashSignatures refuses a table of another signature " +
+    "format: nothing is appended, the read is refused too") {
+    // a pre-hashed-shingle table: `sh` holds strings, no sh_encoding recorded
+    val table = java.nio.file.Files.createTempDirectory("graft_sig_old")
+      .resolve("sigs").toString
+    val sink = graft.sink.SnapshotSink
+    sink.append(Seq((1L, Seq("a b c"), Seq(1L, 2L))).toDF("doc_id", "sh", "sig"),
+      table, "doc_id", Seq.empty,
+      Map("op" -> "minhash_signatures", "shingle_n" -> "3", "num_hashes" -> "64"))
+    val before = sink.lastSnapshot(table).map(_.id)
+    val ex = intercept[IllegalArgumentException] {
+      Dedup.persistMinhashSignatures(docs, table, "doc_id", "text",
+        shingleN = 3, numHashes = 64)
+    }
+    assert(ex.getMessage.contains("pre-hashed-sh"), ex.getMessage)
+    assert(sink.lastSnapshot(table).map(_.id) == before, "a snapshot was committed")
+    intercept[IllegalArgumentException] {
+      Dedup.readMinhashSignatures(spark, table, shingleN = 3, numHashes = 64)
+    }
+    // a hashed table under other LSH parameters is refused on write as well
+    val hashed = java.nio.file.Files.createTempDirectory("graft_sig_nh")
+      .resolve("sigs").toString
+    Dedup.persistMinhashSignatures(docs.where(col("doc_id") < 5), hashed,
+      "doc_id", "text", shingleN = 3, numHashes = 64)
+    intercept[IllegalArgumentException] {
+      Dedup.persistMinhashSignatures(docs, hashed, "doc_id", "text",
+        shingleN = 3, numHashes = 32)
+    }
+    assert(sink.lastSnapshot(hashed).map(_.id).contains(1))
+  }
+
+  test("q_minhash_lsh_incremental leaves no signature temp dir behind") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_q_incr")
+    docs.write.parquet(dir.resolve("documents.parquet").toString)
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def sigDirs(): Set[String] = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_incr_sigs")).toSet
+      finally ls.close()
+    }
+    val before = sigDirs()
+    val rows = SparkEntry.queries("q_minhash_lsh_incremental")(spark,
+      dir.toString).collect()
+    assert(rows.nonEmpty, "the planted clones must pair")
+    assert(sigDirs() == before, s"left behind: ${sigDirs() -- before}")
+  }
+
   test("incremental plan: old-signature scans are COLUMN-PRUNED (banding " +
     "reads (id, sig) without sh; the corpus-wide sh column is never cached)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sig_plan")
@@ -315,6 +365,38 @@ class DedupSpec extends AnyFunSuite {
     } yield (ia, ib, h)).toSet
     assert(got == want)
     assert(want.count { case (a, b, h) => a >= 5 && b >= 5 && h == 0 } == 10) // C(5,2)
+  }
+
+  test("hammingPairs64 hot-bucket cap binds exactly at maxBucket: a bucket " +
+    "of maxBucket + 1 members is dropped, one of exactly maxBucket pairs in full") {
+    // every 16-bit chunk differs between the groups, so each group owns its
+    // own bucket in all four bands
+    val over = 0x0001000100010001L
+    val atCap = 0x0002000200020002L
+    val sigs = ((1L to 5L).map(_ -> over) ++ (11L to 14L).map(_ -> atCap) :+
+      (21L -> 0x7000300050009000L)).toDF("id", "sig")
+    val got = Dedup.hammingPairs64(sigs, "id", "sig", maxHamming = 3,
+      chunks = 4, maxBucket = 4)
+      .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect()
+    val want = for (a <- 11L to 14L; b <- a + 1 to 14L) yield (a, b, 0)
+    assert(got.sorted.toSeq == want, s"got ${got.sorted.toSeq}")
+  }
+
+  test("hammingPairs64 (full and incremental) with an id repeated under the " +
+    "same signature: one row per pair, never a self-pair") {
+    val s = 0x0F0F0F0F0F0F0F0FL
+    val dup = Seq((1L, s), (1L, s), (2L, s), (9L, 0x7000300050009000L))
+      .toDF("id", "sig")
+    val full = Dedup.hammingPairs64(dup, "id", "sig", maxHamming = 3,
+      chunks = 4, maxBucket = 100)
+      .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect()
+    assert(full.toSeq == Seq((1L, 2L, 0)), s"full: ${full.toSeq}")
+    // the streaming door's shape: the repeat arrives inside one new batch
+    val incr = Dedup.hammingPairs64Incremental(dup, Seq((3L, s)).toDF("id", "sig"),
+      "id", "sig", maxHamming = 3, chunks = 4, maxBucket = 100)
+      .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect()
+    assert(incr.sorted.toSeq == Seq((1L, 2L, 0), (1L, 3L, 0), (2L, 3L, 0)),
+      s"incremental: ${incr.sorted.toSeq}")
   }
 
   test("hammingPairs64Incremental over a persisted signature table ≡ full " +

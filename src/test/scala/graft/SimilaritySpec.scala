@@ -256,6 +256,25 @@ class SimilaritySpec extends AnyFunSuite {
       assert(incr.contains((i, i + 1000L)), s"new×old dupe pair $i"))
   }
 
+  test("persistSemanticAssignments refuses a table built under another " +
+    "centroid model: nothing is appended") {
+    val centroids = vecs.take(8).map(_._2.map(_.toDouble)).toArray
+    val table = java.nio.file.Files.createTempDirectory("graft_sem_model")
+      .resolve("assign").toString
+    val sink = graft.sink.SnapshotSink
+    Similarity.persistSemanticAssignments(corpus.where(col("vec_id") < 20),
+      table, "vec_id", "embedding", centroids)
+    val other = centroids.map(_.map(_ + 1.0))
+    val ex = intercept[IllegalArgumentException] {
+      Similarity.persistSemanticAssignments(corpus, table, "vec_id",
+        "embedding", other)
+    }
+    assert(ex.getMessage.contains("centroid model"), ex.getMessage)
+    assert(sink.lastSnapshot(table).map(_.id).contains(1),
+      "a snapshot was committed under the other model")
+    assert(sink.read(spark, table).count() == 20L)
+  }
+
   private lazy val pqSetup = {
     val centroids = vecs.take(8).map(_._2.map(_.toDouble)).toArray
     val m = 4; val kS = 8; val subLen = dim / m

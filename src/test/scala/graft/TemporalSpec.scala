@@ -132,6 +132,21 @@ class TemporalSpec extends AnyFunSuite {
     }
   }
 
+  test("sessionize compares elapsed time exactly, not in whole seconds") {
+    // gaps of exactly 1800 s (same session), 1800.4 s and 1800.6 s (new
+    // sessions); flooring each timestamp to whole seconds would read the
+    // 1800.4 s gap as 1800 s
+    val t0 = 1700000000000L
+    val df = Seq((1L, t0), (2L, t0 + 1800000L), (3L, t0 + 3600400L),
+        (4L, t0 + 5401000L))
+      .map { case (id, ms) => (id, "e", new Timestamp(ms)) }
+      .toDF("event_id", "entity", "ts")
+    val got = Temporal.sessionize(df, Seq("entity"), "ts", 1800L,
+        tieBreakCols = Seq("event_id"))
+      .select("event_id", "session_id_seq").as[(Long, Long)].collect().toMap
+    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 3L), s"got $got")
+  }
+
   test("lagLead matches per-entity neighbors") {
     val df = Seq((1L, "a", ts(1), 10.0), (2L, "a", ts(2), 20.0), (3L, "a", ts(3), 30.0))
       .toDF("event_id", "entity", "ts", "value")
